@@ -7,6 +7,10 @@ Prints ONE JSON line:
 
 Each query is forced end-to-end with the noop sink (full plan execution,
 no driver collect). Times exclude SparkSession startup.
+
+The full dump is archived as bench_history/BENCH_<sha>.json; a run whose
+core count differs from ``OFFICIAL_CPUS`` gets a ``_c<cpus>`` suffix so it
+never overwrites the official archive.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entry_mod
 from henbun_spark import sources
 from henbun_spark.operators import relational
+
+OFFICIAL_CPUS = "32"  # core count of the official archive run
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -530,11 +536,11 @@ def main():
             suffix += "_probe"
         if is_subset:
             suffix += "_partial"
-        # non-default core counts get their own archive name: the r12
-        # driver's 8-core scaling pass clobbered the 32-core official
-        # archive for the final sha (the name keyed on sha+sf only)
+        # core counts other than the official run's get their own archive
+        # name: an 8-core scaling run once overwrote the 32-core official
+        # archive of the same sha (the name keyed on sha+sf only)
         cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-        if cpus != "32":
+        if cpus != OFFICIAL_CPUS:
             suffix += f"_c{cpus}"
         with open(os.path.join(hist, f"BENCH_{sha}{suffix}.json"), "w") as f:
             json.dump(full, f)

@@ -352,7 +352,8 @@ def bloom_filter_probe(
     )
     min_mb = float(os.environ.get("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB",
                                   _BLOOM_LITERAL_PROBE_MIN_BYTES >> 20))
-    n_words = m_bits // _BLOOM_WORD_BITS
+    # ceil: when m_bits % 32 != 0 the last, partial word holds bits too
+    n_words = (m_bits + _BLOOM_WORD_BITS - 1) // _BLOOM_WORD_BITS
     use_literal = (
         min_mb >= 0
         and n_words <= _BLOOM_LITERAL_MAX_WORDS

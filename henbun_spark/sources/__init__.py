@@ -37,6 +37,15 @@ TABLES = [
 # columns stored as TIMESTAMP(NANOS) in parquet -> read as long, convert
 _NANO_TS_COLS = {"events": ["ts"]}
 
+#: every session's Python worker daemon (see henbun_spark.pyworker), and
+#: the directory its workers import this copy of henbun_spark from
+PYTHON_WORKER_CONF = {
+    "spark.python.daemon.module": "henbun_spark.pyworker",
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ),
+}
+
 
 def get_spark(
     app_name: str = "henbun_spark",
@@ -45,7 +54,11 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Opinionated local-mode session: AQE on, Arrow on, UTC, shuffle
-    partitions sized to cores (not the 200 default)."""
+    partitions sized to cores (not the 200 default). Python workers fork
+    from the `henbun_spark.pyworker` daemon, which stops every task from
+    re-reading pyspark.zip's directory (~0.3 s of each task on CPython
+    3.11); `PYTHON_WORKER_CONF` also puts this copy of henbun_spark on the
+    workers' PYTHONPATH, since the daemon imports it."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(cpus)
@@ -65,6 +78,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config(map=PYTHON_WORKER_CONF)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

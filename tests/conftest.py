@@ -12,6 +12,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark():
     from pyspark.sql import SparkSession
 
+    from henbun_spark.sources import PYTHON_WORKER_CONF
+
     spark = (
         SparkSession.builder.master("local[4]")
         .appName("henbun_spark_tests")
@@ -23,6 +25,8 @@ def spark():
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.warehouse.dir", "/tmp/henbun_test_warehouse")
         .config("spark.ui.enabled", "false")
+        # the production Python worker path: the same daemon as get_spark
+        .config(map=PYTHON_WORKER_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
